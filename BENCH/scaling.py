@@ -48,6 +48,7 @@ sys.path.insert(0, %(repo)r)
 from pyspark.sql import functions as F
 from jaccard_ml_spark.config import DedupConfig
 from pyspark import StorageLevel
+from jaccard_ml_spark.persist import release_persisted
 from jaccard_ml_spark.plans.pipeline import dedup_pipeline
 
 # Cache tier is pinned IDENTICAL at both levels. At 45M turns the
@@ -63,23 +64,7 @@ from jaccard_ml_spark.plans.pipeline import dedup_pipeline
 # which tier a run actually used).
 CACHE_LEVEL = (None if os.environ.get("SCALING_CACHE_LEVEL") == "memory"
                else StorageLevel.DISK_ONLY)
-# SCALING_BUCKETED_SETS=1: the fused sets table is CHECKPOINTED
-# bucketed+sorted by id (plans/checkpoint.write_bucketed — the Iceberg
-# bucket(N, id) stand-in) instead of persisted, so verify's two joins
-# and the cluster assignment read the fat side with NO exchange (the
-# production layout named in operators/verify.py:49-51). The bucketed
-# write replaces the cache materialization in the same timed window —
-# the A/B measures (+1 bucketed parquet write) vs (−2 fat exchanges).
-BUCKETED = os.environ.get("SCALING_BUCKETED_SETS", "0") == "1"
-# SCALING_SEMI_FILTER=1: verify_pairs broadcasts the candidate-id set
-# as a leftsemi filter on the sets side (operators/verify.py). The r4
-# A/B that rejected this (327s on vs 248s off at 45M) ran BEFORE the
-# persist fix (the candidate subtree evaluated twice); with candidates
-# persisted the filter drops ~67%% of the fat items rows from verify's
-# two exchanges + sorts — re-measured here as the remaining
-# byte-remover on the scaling gate.
-SEMI = os.environ.get("SCALING_SEMI_FILTER", "0") == "1"
-CFG = DedupConfig(verify_semi_filter=SEMI)
+CFG = DedupConfig()
 from jaccard_ml_spark.session import get_spark
 from jaccard_ml_spark.sources.tables import read_transcripts
 
@@ -183,15 +168,6 @@ for kv in os.environ.get("SCALING_EXTRA_CONF", "").split(","):
         k, _, v = kv.partition("=")
         extra[k.strip()] = v.strip()
 
-if BUCKETED:
-    # bucketed checkpoints need a catalog (bucket metadata lives
-    # there); keep derby + warehouse off the repo tree and identical
-    # at both levels
-    extra.setdefault("spark.sql.warehouse.dir", "/tmp/scaling_warehouse")
-    extra.setdefault(
-        "javax.jdo.option.ConnectionURL",
-        "jdbc:derby:;databaseName=/tmp/scaling_metastore_db;create=true")
-
 spark = get_spark(master=master,
                   shuffle_partitions=max(total_cores * 2, 8),
                   app_name=f"scaling-{mode}-{n_exec}", extra_conf=extra)
@@ -257,34 +233,17 @@ tx.count()   # warm tmpfs metadata; data itself is RAM-backed
 # N times the one-off warmup, a pure measurement artifact at
 # minutes-long run lengths. The sample drives the same code paths
 # (UDFs, joins, CC) at ~1/MOD the cost of the old full cold iteration.
-ckpt_root = stage_root + f"/scaling_ckpt_{mode}_{n_exec}"
-# n_buckets for the bucketed-sets variant = the data-scaled partition
-# count above — identical at both levels AND equal to the shuffle
-# partition count, so the slim pair side co-partitions with the
-# bucketed scan without a second exchange
-def make_store(tag):
-    from jaccard_ml_spark.plans.checkpoint import CheckpointStore
-    return CheckpointStore(spark, ckpt_root + "/" + tag,
-                           run_id=f"{tag}{n_exec}")
-
 warm_mod = int(os.environ.get("SCALING_WARMUP_MOD", "8"))
 t_w0 = time.monotonic()
 if warm_mod > 0:
     sample = tx.where(F.pmod(F.xxhash64("conv_id"), F.lit(warm_mod)) == 0)
-    wres = dedup_pipeline(sample, CFG, storage_level=CACHE_LEVEL,
-                          sets_store=make_store("warm") if BUCKETED
-                          else None, sets_buckets=parts)
+    wres = dedup_pipeline(sample, CFG, storage_level=CACHE_LEVEL)
     wres.pairs.count(); wres.clusters.count()
-    wres.shingle_sets.unpersist(); wres.pairs.unpersist()
-    from jaccard_ml_spark.operators import verify as _verify
-    _verify.release_persisted()   # warmup's semi-filter candidate cache
-    shutil.rmtree(ckpt_root + "/warm", ignore_errors=True)
+    release_persisted()
 warmup_sec = time.monotonic() - t_w0
 
 t0 = time.monotonic()
-res = dedup_pipeline(tx, CFG, storage_level=CACHE_LEVEL,
-                     sets_store=make_store("run") if BUCKETED else None,
-                     sets_buckets=parts)
+res = dedup_pipeline(tx, CFG, storage_level=CACHE_LEVEL)
 n_pairs = res.pairs.count()
 pairs_sec = time.monotonic() - t0
 res.clusters.count()
@@ -309,10 +268,7 @@ pair_sig = sorted((r.id_a, r.id_b) for r in
                   res.pairs.select("id_a", "id_b").collect())
 clus_sig = sorted((r.id, r.cluster_id) for r in res.clusters.collect())
 rhash = hashlib.sha256(repr((pair_sig, clus_sig)).encode()).hexdigest()[:16]
-res.shingle_sets.unpersist(); res.pairs.unpersist()
-from jaccard_ml_spark.operators.verify import release_persisted
 release_persisted()
-shutil.rmtree(ckpt_root, ignore_errors=True)
 
 print("RESULT " + json.dumps({
     "level": n_exec, "master": master, "turns": n_turns, "pairs": n_pairs,
@@ -321,7 +277,6 @@ print("RESULT " + json.dumps({
     "warmup_sec": round(warmup_sec, 2),
     "turns_per_sec": round(n_turns / wall, 1),
     "cache_mem_mb": cache_mem_mb, "cache_disk_mb": cache_disk_mb,
-    "bucketed_sets": BUCKETED, "semi_filter": SEMI,
     "result_hash": rhash,
 }))
 spark.stop()
@@ -598,16 +553,15 @@ def _same_config(r: dict, n_convs: int) -> bool:
     samples predate that field and fall back to a turns-per-conv
     heuristic (~7.8 at the generator's default min/max_turns — brittle
     if those change, which is why new samples record n_convs). Config
-    match: the bucketed-sets flag (absent = False on legacy samples)."""
+    match: legacy samples of the refuted bucketed-sets and semi-filter
+    variants carry a true ``bucketed_sets``/``semi_filter`` flag and
+    are excluded."""
     if r.get("n_convs") is not None:
         same_input = r["n_convs"] == n_convs
     else:
         same_input = abs(r.get("turns", 0) - n_convs * 7.8) < n_convs * 1.0
-    bucketed = os.environ.get("SCALING_BUCKETED_SETS", "0") == "1"
-    semi = os.environ.get("SCALING_SEMI_FILTER", "0") == "1"
-    return (same_input
-            and bool(r.get("bucketed_sets", False)) == bucketed
-            and bool(r.get("semi_filter", False)) == semi)
+    return (same_input and not r.get("bucketed_sets")
+            and not r.get("semi_filter"))
 
 
 def write_report(runs: dict, mode: str, lo: int, hi: int,
@@ -657,18 +611,8 @@ def write_report(runs: dict, mode: str, lo: int, hi: int,
     print(json.dumps(report, indent=2))
 
     unit = ("executors" if mode == "local-cluster" else "task threads")
-    bucketed = bool(rlo.get("bucketed_sets", False))
-    variant = ("**bucketed-sets** — the fused sets table is checkpointed "
-               "bucketed+sorted by id (Iceberg `bucket(N, id)` stand-in, "
-               "`plans/checkpoint.write_bucketed`); verify's two joins and "
-               "the cluster assignment read the fat side with NO exchange"
-               if bucketed else
-               "**persisted-cache** — the fused sets table is persisted "
+    variant = ("**persisted-cache** — the fused sets table is persisted "
                "(DISK_ONLY on tmpfs) and verify sort-merge-exchanges it")
-    if rlo.get("semi_filter"):
-        variant += (" + **verify semi-filter** — the persisted candidate"
-                    " table's id set broadcast-filters the sets side"
-                    " before verify's joins (operators/verify.py)")
 
     def row(level, r):
         mu, sp = mean_spread(level)
@@ -717,10 +661,11 @@ sample); the mean ± spread over rounds is reported alongside per the
 reference's mean-over-runs protocol (src/main.cu:103-108). Raw
 per-run samples: BENCH/scaling_runs.json.
 
-Pipeline variant measured here: {variant}. Samples of the other
-variant (if any) remain in BENCH/scaling_runs.json keyed by their
-`bucketed_sets` flag; the report filters to one variant so the two
-levels always measure the identical job.
+Pipeline variant measured here: {variant}. Samples of the refuted
+bucketed-sets and semi-filter variants remain in
+BENCH/scaling_runs.json under their `bucketed_sets`/`semi_filter`
+flags; the report excludes them so the two levels always measure the
+identical job.
 
 Shuffle dirs are tmpfs (`/dev/shm`): the VM's single co-tenant virtio
 disk is shared by all executors — writeback throttling inflated

@@ -1,4 +1,4 @@
-.PHONY: test test-fast bench scaling dist clean
+.PHONY: test test-fast bench bench-smoke scaling dist clean
 
 test:
 	python -m pytest tests/ -x -q
@@ -8,6 +8,9 @@ test-fast:
 
 bench:
 	python bench.py
+
+bench-smoke:
+	python3 -m pytest perfbench/test_smoke.py
 
 scaling:
 	python BENCH/scaling.py

@@ -42,6 +42,7 @@ from jaccard_ml_spark.operators.setsim import (
     pairwise_metrics,
     posting_lists,
 )
+from jaccard_ml_spark.persist import persist
 from jaccard_ml_spark.plans.pipeline import dedup_documents
 
 CFG = DedupConfig()
@@ -303,7 +304,7 @@ def q_lsh_near_dup_pairs(spark, sf_dir):
     """MinHash→LSH→verify at J ≥ 0.8; oracle is the exact computation
     (recall is 1−(1−t^r)^b ≈ 1−5e-8 at the threshold — differential
     testing in the reference's golden-file style)."""
-    sets_df = _doc_sets(spark, sf_dir).persist()
+    sets_df = persist(_doc_sets(spark, sf_dir))
     sigs = minhash_signatures(sets_df, CFG)
     from jaccard_ml_spark.operators.candidates import candidate_pairs
     from jaccard_ml_spark.operators.verify import verify_pairs

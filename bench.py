@@ -32,6 +32,8 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "BENCH"))
 
+from jaccard_ml_spark.persist import release_persisted  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # polluted-query retries (0 disables); each retry re-brackets with
@@ -141,8 +143,7 @@ def _bench_transcripts(spark, sf: float):
         res = dedup_pipeline(tx, DedupConfig())
         res.pairs.count()
         res.clusters.count()
-        res.shingle_sets.unpersist()
-        res.pairs.unpersist()
+        release_persisted()
 
     return run, n_turns
 
@@ -160,10 +161,6 @@ def main() -> None:
     times: dict[str, float] = {}
     weather: dict[str, dict] = {}
     w = Weather()
-    from jaccard_ml_spark.operators.similarity import release_persisted
-    from jaccard_ml_spark.operators.verify import (
-        release_persisted as release_verify_persisted,
-    )
 
     def run_one(name, fn):
         rec = _timed(fn, w)
@@ -184,11 +181,9 @@ def main() -> None:
         def fn(name=name):
             df = qs[name](spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
-            # drop the similarity ops' cached vector tables (and any
-            # semi-filter candidate cache) between queries so a bench
-            # loop can't accumulate executor storage (ADVICE r2)
+            # drop every table the query persisted so a bench loop
+            # can't accumulate executor storage (ADVICE r2)
             release_persisted()
-            release_verify_persisted()
         run_one(name, fn)
 
     tx_run, n_turns = _bench_transcripts(spark, sf)

@@ -44,28 +44,6 @@ class DedupConfig:
     simhash_hamming_max: int = 3
     # --- connected components ----------------------------------------
     cc_max_iterations: int = 50
-    # --- shingle implementation ---------------------------------------
-    # "arrow" pandas-UDF numpy path (functions/shingle_arrow.py) — the
-    #         default: measured 1.7× faster single-stream than the JVM
-    #         expression path AND it scales with task threads (each
-    #         Python worker is its own process/heap), while the JVM
-    #         path collapses at high thread counts in a shared JVM
-    #         (measured 94s→226s from local[4]→local[16] at 1.9M turns:
-    #         per-shingle UTF8String allocation saturates the single
-    #         allocator; on a multi-executor cluster with few cores per
-    #         JVM either path scales).
-    # "jvm"   pure Catalyst expressions (functions/text.py) — kept for
-    #         clusters with small executors and as the SQL-mirrorable
-    #         reference implementation.
-    shingle_impl: str = "arrow"
-    # Semi-join reduction on the verify join's sets side (operators/
-    # verify.py): candidate ids broadcast-filter the sets table before
-    # the exact-Jaccard join. OFF by default: the candidate subtree is
-    # uncached and gets evaluated twice (broadcast + join), which a
-    # 45M-turn A/B measured 32% slower than shuffling the full sets
-    # table. Enable for selective probe regimes (tiny candidate sets
-    # over a huge corpus).
-    verify_semi_filter: bool = False
     # --- misc ----------------------------------------------------------
     text_separator: str = "\n"    # turn joiner for conversation assembly
 

@@ -1,10 +1,10 @@
 """Arrow-vectorized shingling: text → sorted distinct k-gram hash sets.
 
-The JVM expression path (functions/text.py) allocates ~10-15 KB of
-short-lived objects per conversation (normalized string, ~400-900 token
-UTF8Strings, slices) — measured as the single-JVM scaling limiter: at
-local[16] the shared allocator collapses (94s → 226s vs local[4] on
-1.9M turns). This path does the same computation per Arrow batch in
+The pipeline's only shingle path. The Catalyst-expression path it
+replaced allocated ~10-15 KB of short-lived objects per conversation
+(normalized string, ~400-900 token UTF8Strings, slices) — measured as
+the single-JVM scaling limiter: at local[16] the shared allocator
+collapsed (94s → 226s vs local[4] on 1.9M turns). This path does the same computation per Arrow batch in
 C-vectorized steps with NO per-token Python objects either — the
 round-1 version built a Python ``str`` per token (~700 per row), whose
 CPython obmalloc arena churn caused kernel-level mmap/munmap storms at
@@ -29,8 +29,8 @@ Per batch (all numpy, one pass over the concatenated UTF-8 bytes):
               array with per-row boundary masking — pure numpy
   distinct+sort np.unique per row slice
 
-Hash family differs from the JVM path (byte-polynomial vs
-xxhash64-of-slices); set cardinalities, equality relations, and
+Hash family differs from functions/text.py (byte-polynomial vs
+xxhash64); set cardinalities, equality relations, and
 therefore Jaccard values are identical w.h.p. — both are content-keyed
 64-bit families.
 """
@@ -214,8 +214,8 @@ def shingle_sets_udf(k: int):
 
 def add_shingle_hash_sets_arrow(df, text_col: str, k: int,
                                 out_col: str = "items"):
-    """DataFrame helper: the Arrow-vectorized twin of
-    functions.text.add_shingle_hash_sets (the production hot path)."""
+    """DataFrame helper: text → sorted distinct shingle-hash sets in
+    ``out_col``, one Arrow UDF pass."""
     udf = shingle_sets_udf(k)
     return df.withColumn(out_col, udf(F.col(text_col)))
 

@@ -38,9 +38,8 @@ def shingles_from_tokens(toks: Column, k: int) -> Column:
     expression referenced inside a higher-order-function lambda is
     re-evaluated once PER ELEMENT (Catalyst performs no CSE across
     lambda iterations), which turns tokenization into
-    O(n_tokens · |text|) per row — a measured 26× slowdown. Callers go
-    through the DataFrame helpers below, which introduce the projection
-    boundary. Texts shorter than ``k`` tokens produce one shingle = the
+    O(n_tokens · |text|) per row — a measured 26× slowdown. Callers
+    materialize the tokens at a projection boundary first. Texts shorter than ``k`` tokens produce one shingle = the
     whole token list, so no document vanishes from the index.
     """
     n = F.greatest(F.size(toks) - F.lit(k - 1), F.lit(1))
@@ -75,41 +74,6 @@ def shingles(col: Column, k: int) -> Column:
 def shingle_hashes(col: Column, k: int) -> Column:
     """Column-level convenience (SMALL/TEST data only)."""
     return shingle_hashes_from_tokens(tokens(col), k)
-
-
-def shingle_hashes_from_token_hashes(th: Column, k: int) -> Column:
-    """Sorted distinct k-gram hashes from a MATERIALIZED array of
-    per-token xxhash64 values: gram_i = xxhash64(th[i..i+k-1]).
-
-    Numerically equivalent information to hashing the space-joined
-    string k-gram (tokens are already split), but builds no strings —
-    measured 5× faster end-to-end on the assembly+shingle stage, whose
-    allocation rate is the single-JVM scaling limiter.
-    """
-    n = F.greatest(F.size(th) - F.lit(k - 1), F.lit(1))
-    grams = F.when(
-        F.size(th) > 0,
-        F.transform(F.sequence(F.lit(1), n),
-                    lambda i: F.xxhash64(F.slice(th, i, k))),
-    ).otherwise(F.array().cast("array<bigint>"))
-    return F.array_sort(F.array_distinct(grams))
-
-
-def add_shingle_hash_sets(df, text_col: str, k: int,
-                          out_col: str = "items"):
-    """DataFrame helper: text → sorted distinct shingle-hash sets (the
-    fast path): tokens and per-token hashes are each materialized at a
-    projection boundary (HOF lambdas re-evaluate any non-attribute
-    expression once per element), and the k-gram hash is computed over
-    token-hash slices — no shingle strings.
-    """
-    t1, t2 = "_toks__", "_tokh__"
-    out = (
-        df.withColumn(t1, tokens(F.col(text_col)))
-        .withColumn(t2, F.transform(F.col(t1), lambda x: F.xxhash64(x)))
-        .withColumn(out_col, shingle_hashes_from_token_hashes(F.col(t2), k))
-    )
-    return out.drop(t1, t2)
 
 
 def char_shingle_hashes_from_norm(norm: Column, k: int) -> Column:

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from jaccard_ml_spark.config import DedupConfig
 from jaccard_ml_spark.functions.hashing import band_hash_cols, minhash_udf
+from jaccard_ml_spark.persist import persist
 
 
 def minhash_signatures(sets_df: DataFrame, cfg: DedupConfig,
@@ -161,7 +162,7 @@ def _band_split_buckets(mega: DataFrame, signatures: DataFrame,
 
 
 def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
-                    cache: bool = True, auto_tune: bool = False,
+                    auto_tune: bool = False,
                     tuned: dict | None = None,
                     signatures_persisted: bool = False,
                     storage_level=None) -> DataFrame:
@@ -186,8 +187,11 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
     unpersisted bucket table re-runs the MinHash UDF once per branch
     (measured 48 Arrow evals in the naive plan). On a production
     cluster this is the checkpointed signature/bucket Iceberg table.
+    Its persists (and the signature one below) register with
+    ``persist.release_persisted`` at ``storage_level`` (None: Spark's
+    default tier).
     """
-    if cache and not signatures_persisted:
+    if not signatures_persisted:
         # mega-bucket band splitting joins signatures back by id; keep
         # them warm so the (rare) branch doesn't recompute the UDF.
         # ``signatures_persisted=True`` (the fused-pipeline path) means
@@ -196,8 +200,7 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
         # and, worse, at a DIFFERENT storage tier than the caller's
         # pinned one (the N-vs-4N tier asymmetry BENCH/scaling.py
         # guards against).
-        signatures = (signatures.persist(storage_level) if storage_level
-                      else signatures.persist())
+        signatures = persist(signatures, storage_level)
     buckets = lsh_buckets(signatures, cfg)
     # ONE exchange: group each bucket's members together. Everything
     # below works on the grouped table — within-bucket pairs are
@@ -208,15 +211,13 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
         F.sort_array(F.collect_list("id")).alias("members"),
         F.count("*").alias("bucket_size"),
     )
-    if cache:
-        # persisted: the strategy branches below share this subtree, and
-        # a cold cache races under AQE (branches each materialize it).
-        # Materialization rides on the first driver aggregate below
-        # (auto-tune histogram or strategy-class probe) — an aggregate
-        # computes every partition, populating the cache in the same
-        # job, so no separate eager count() barrier is paid.
-        grouped = (grouped.persist(storage_level) if storage_level
-                   else grouped.persist())
+    # persisted: the strategy branches below share this subtree, and
+    # a cold cache races under AQE (branches each materialize it).
+    # Materialization rides on the first driver aggregate below
+    # (auto-tune histogram or strategy-class probe) — an aggregate
+    # computes every partition, populating the cache in the same
+    # job, so no separate eager count() barrier is paid.
+    grouped = persist(grouped, storage_level)
 
     if auto_tune:
         from jaccard_ml_spark.operators.autotune import (
@@ -239,19 +240,15 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
     # that hold no local data (measured 3-4 s PER near-empty stage on
     # the scaling harness, ~20 s per run across the five arms). One
     # tiny aggregate on the already-persisted fan-out table tells us
-    # which classes exist; when `cache` is off (no persisted table to
-    # read cheaply) every branch is kept, preserving laziness.
-    if cache:
-        cls = grouped.select(
-            F.sum(((F.col("bucket_size") > c0)
-                   & (F.col("bucket_size") <= c1)).cast("long"))
-            .alias("n_hot"),
-            F.sum((F.col("bucket_size") > c1).cast("long")).alias("n_mega"),
-        ).first()
-        has_hot = bool(cls.n_hot)
-        has_mega = bool(cls.n_mega)
-    else:
-        has_hot = has_mega = True
+    # which classes exist.
+    cls = grouped.select(
+        F.sum(((F.col("bucket_size") > c0)
+               & (F.col("bucket_size") <= c1)).cast("long"))
+        .alias("n_hot"),
+        F.sum((F.col("bucket_size") > c1).cast("long")).alias("n_mega"),
+    ).first()
+    has_hot = bool(cls.n_hot)
+    has_mega = bool(cls.n_mega)
 
     normal = grouped.where(
         (F.col("bucket_size") > 1) & (F.col("bucket_size") <= c0))

@@ -41,26 +41,7 @@ from pyspark.sql.functions import pandas_udf
 from jaccard_ml_spark.functions import stable_round6
 from jaccard_ml_spark.functions.embeddings import cosine, dot, norm
 from jaccard_ml_spark.operators.candidates import _pairs_from_members
-
-# slim (id, vec) tables persisted by ann_topk / ivf_topk /
-# embedding_near_dup_pairs. A bench loop or long-lived incremental
-# session that never releases them accumulates executor storage until
-# eviction thrash; call release_persisted() after materializing each
-# query's result (bench.py and __spark_entry__ do).
-_PERSISTED: list = []
-
-
-def release_persisted(blocking: bool = False) -> int:
-    """Unpersist every vector table cached by the similarity operators.
-
-    Safe to call after the returned DataFrames are materialized (a
-    later re-materialization would just recompute). Returns the number
-    of tables released.
-    """
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist(blocking)
-    return n
+from jaccard_ml_spark.persist import persist
 
 
 def cosine_topk(
@@ -630,9 +611,8 @@ def ann_topk(
     is a true differential; LSH-path recall is asserted separately in
     tests with the cutoff disabled).
     """
-    vecs = vectors.select(F.col(id_col).alias(id_col),
-                          F.col(vec_col).alias(vec_col)).persist()
-    _PERSISTED.append(vecs)
+    vecs = persist(vectors.select(F.col(id_col).alias(id_col),
+                                  F.col(vec_col).alias(vec_col)))
     n = vecs.count()
     if n <= brute_cutoff:
         return cosine_topk(vecs, vecs, k, id_col, vec_col)
@@ -702,9 +682,8 @@ def embedding_near_dup_pairs(
     cost-model rule, like the skew knobs in operators/autotune.py.
     """
     assert strategy in ("auto", "lsh", "brute"), strategy
-    vecs = vectors.select(F.col(id_col).alias(id_col),
-                          F.col(vec_col).alias(vec_col)).persist()
-    _PERSISTED.append(vecs)
+    vecs = persist(vectors.select(F.col(id_col).alias(id_col),
+                                  F.col(vec_col).alias(vec_col)))
     n = vecs.count()
     if strategy != "brute" and n <= brute_cutoff:
         return cosine_dup_pairs(vecs, threshold, id_col, vec_col)
@@ -859,9 +838,8 @@ def ivf_topk(
     hash-range sample. Below ``brute_cutoff`` the exact broadcast path
     runs instead (see ann_topk).
     """
-    vecs = vectors.select(F.col(id_col).alias(id_col),
-                          F.col(vec_col).alias(vec_col)).persist()
-    _PERSISTED.append(vecs)
+    vecs = persist(vectors.select(F.col(id_col).alias(id_col),
+                                  F.col(vec_col).alias(vec_col)))
     n = vecs.count()
     if n <= brute_cutoff:
         return cosine_topk(vecs, vecs, k, id_col, vec_col)

@@ -7,32 +7,20 @@ sorted hash arrays — a JVM-codegen sort-merge intersection, i.e. the
 same two-pointer merge as ``edge_based_on_device``
 (``/root/reference/src/edge_metrics.cu:695-711``), minus the CUDA.
 
-Two shuffles: candidate pairs join the signature/shingle table on id_a
-and id_b (sort-merge joins on the id — at production scale the sets
-table is bucketed by id so these degenerate to co-located joins).
+Two joins: the candidate pairs join the sets table on id_a and then on
+id_b. Without a broadcast both are sort-merge joins that exchange the
+full sets table. Two layouts that remove or shrink that exchange were
+measured at 45M turns and lost to it (SCALE_NOTES round 5): an
+id-bucketed sets checkpoint (scaling efficiency 0.566 against 0.669)
+and a broadcast semi-join of the candidate ids onto the sets side
+(0.425), which re-evaluates the candidate subtree or pays to persist
+it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# candidate tables persisted by verify_pairs(semi_filter=True); same
-# registry pattern as operators/similarity.py and streaming/incremental
-# — a caller loop that never releases them would otherwise accumulate
-# executor storage one cached candidate table per call
-_PERSISTED: list = []
-
-
-def release_persisted(blocking: bool = False) -> int:
-    """Unpersist every candidate table cached by verify_pairs.
-
-    Safe after the returned pairs are materialized (a later
-    re-materialization would just recompute). Returns the count."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist(blocking)
-    return n
 
 
 def verify_pairs(
@@ -42,54 +30,15 @@ def verify_pairs(
     id_col: str = "id",
     items_col: str = "items",
     keep_below_threshold: bool = False,
-    semi_filter: bool = False,
-    persist_level=None,
 ) -> DataFrame:
     """(id_a, id_b) candidates → (id_a, id_b, intersection, size_a, size_b,
     jaccard), filtered to jaccard ≥ threshold unless asked otherwise.
 
     fp64 division; the reference's fp32 + 1e-3 tolerance
     (src/utils.cuh:655) is strictly looser.
-
-    ``semi_filter`` (default OFF) is a semi-join reduction on the
-    sets side: only rows whose id appears in some candidate pair can
-    match the inner join, so broadcasting the candidate-id set
-    (8 B/id) as a leftsemi filter shrinks the sets-side exchange and
-    both sort-merge sorts to the surviving fraction (~33% of the
-    corpus at 45M turns). Measured OFF-by-default because in THIS
-    pipeline it loses: the candidate table is an uncached subtree
-    (pairing + distinct over the persisted bucket table), and feeding
-    it to both the broadcast and the join evaluates it twice — 45M-turn
-    A/B at 16 cores: 248s off vs 327s on (SCALE_NOTES.md). Turn it on
-    when candidates are cheap or tiny relative to the sets table —
-    e.g. decontamination-style probes of a huge corpus with a small
-    eval set — and note plain id-broadcast stops fitting at ~10^9
-    candidate ids (use the bucketed/checkpointed sets table instead,
-    whose co-located join removes the exchange the filter would
-    shrink).
     """
     sets = sets_df.select(F.col(id_col).alias("_vid"),
                           F.col(items_col).alias("_vitems"))
-    if semi_filter:
-        # The candidate subtree feeds BOTH the broadcast id-set and the
-        # join's probe side; unpersisted it evaluates twice — the
-        # measured reason this filter lost its 45M A/B. Persist unless
-        # the caller already did (pairs.storageLevel.useMemory/useDisk).
-        # ``persist_level`` pins the tier (harnesses comparing cluster
-        # sizes pin EVERY cache to one tier — Spark's MEMORY_AND_DISK
-        # default is memory-resident at one level and spilled at the
-        # other, a storage asymmetry, not compute scaling); None keeps
-        # Spark's default.
-        lvl = pairs.storageLevel
-        if not (lvl.useMemory or lvl.useDisk):
-            pairs = (pairs.persist(persist_level) if persist_level
-                     else pairs.persist())
-            _PERSISTED.append(pairs)
-        cand_ids = (pairs.select(F.col("id_a").alias("_vid"))
-                    .unionAll(pairs.select(F.col("id_b").alias("_vid")))
-                    .distinct())
-        sets = sets.join(F.broadcast(cand_ids), "_vid", "leftsemi")
-
     joined = (
         pairs
         .join(sets.withColumnsRenamed(

@@ -1,8 +1,22 @@
-"""The end-to-end near-duplicate pipeline.
+"""The near-duplicate stage graph, defined once.
 
-    transcripts → assemble → shingle-hash sets → MinHash signatures
-    → LSH candidates (skew-aware) → exact-Jaccard verify → threshold
-    → connected components → cluster assignments
+    conversations → sets (fused shingle+MinHash) → candidates (LSH,
+    skew-aware) → pairs (exact-Jaccard verify, threshold) → clusters
+    (connected components + assignment)
+
+``dedup_stages`` wires the graph. Every stage goes through a
+``materialize(name, build)`` step that the executor supplies:
+
+* ``dedup_pipeline`` and ``dedup_documents`` persist the sets and pairs
+  tables in memory and leave the other stages lazy;
+* ``plans.resumable.run_resumable_dedup`` passes
+  ``CheckpointStore.stage``, which writes every stage and resumes after
+  the last completed one.
+
+The sets stage is one Arrow pass that returns (id, items, set_size,
+signature): the shingle arrays, the widest column, cross the
+JVM↔Python boundary once, and the signatures are a projection of the
+same table (functions/shingle_arrow.py: fused_shingle_minhash).
 
 Shuffle census at scale (SURVEY §3.4): (1) groupBy conv_id for assembly,
 (2) band-bucket exchange, (3) candidate distinct, (4+5) verify joins on
@@ -12,6 +26,7 @@ shuffle-free map stages.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -20,203 +35,104 @@ from pyspark.sql import functions as F
 from jaccard_ml_spark.config import DedupConfig
 from jaccard_ml_spark.functions.shingle_arrow import (
     add_shingle_hash_sets_arrow,
+    fused_shingle_minhash,
 )
-from jaccard_ml_spark.functions.text import add_shingle_hash_sets
 from jaccard_ml_spark.operators.assemble import assemble_conversations
-from jaccard_ml_spark.operators.candidates import (
-    candidate_pairs,
-    minhash_signatures,
-)
+from jaccard_ml_spark.operators.candidates import candidate_pairs
 from jaccard_ml_spark.operators.cluster import (
     assign_clusters,
     connected_components,
 )
 from jaccard_ml_spark.operators.verify import verify_pairs
+from jaccard_ml_spark.persist import persist
+
+Materialize = Callable[[str, Callable[[], DataFrame]], DataFrame]
 
 
 @dataclass
 class DedupResult:
-    conversations: DataFrame   # conv_id, n_turns, turns, text
-    shingle_sets: DataFrame    # id, items (+ set_size, signature on the
-                               # fused arrow path — it IS the cache)
+    conversations: DataFrame   # conv_id, text (+ n_turns, turns)
+    shingle_sets: DataFrame    # id, items, set_size, signature
     signatures: DataFrame      # id, set_size, signature
     candidates: DataFrame      # id_a, id_b
     pairs: DataFrame           # id_a, id_b, intersection, sizes, jaccard
     clusters: DataFrame        # id, cluster_id
 
 
-def _add_shingles(df: DataFrame, cfg: DedupConfig) -> DataFrame:
-    if cfg.shingle_impl == "arrow":
-        return add_shingle_hash_sets_arrow(df, "text", cfg.k_shingle)
-    return add_shingle_hash_sets(df, "text", cfg.k_shingle)
-
-
 def shingle_sets_from_conversations(conversations: DataFrame,
                                     cfg: DedupConfig) -> DataFrame:
+    """(conv_id, text) → (id, items) on the Arrow shingle path, without
+    MinHash: the input of the exact set-similarity operators and of
+    the incremental path."""
     base = conversations.select(F.col("conv_id").alias("id"), "text")
-    return _add_shingles(base, cfg).select("id", "items")
+    return add_shingle_hash_sets_arrow(base, "text", cfg.k_shingle).select(
+        "id", "items")
+
+
+def dedup_stages(conversations: Callable[[], DataFrame], cfg: DedupConfig,
+                 materialize: Materialize, storage_level=None,
+                 auto_tune: bool = False,
+                 tuned: dict | None = None) -> DedupResult:
+    """Run the stage graph from a (conv_id, text) builder.
+
+    ``materialize(name, build)`` receives each stage's name
+    (conversations, sets, candidates, pairs, clusters) and a zero-arg
+    builder, and returns the table the later stages read.
+    ``storage_level`` is the tier of the persists inside
+    ``candidate_pairs``; ``auto_tune``/``tuned`` are passed to it.
+    """
+    conv = materialize("conversations", conversations)
+    sets = materialize("sets", lambda: fused_shingle_minhash(
+        conv.select(F.col("conv_id").alias("id"), "text"), "text",
+        cfg.k_shingle, cfg.num_perm, cfg.minhash_seed))
+    signatures = (sets.select("id", "set_size", "signature")
+                  .where(F.col("signature").isNotNull()))
+    # the sets stage is materialized, so candidate_pairs must not
+    # persist the signature projection a second time
+    cands = materialize("candidates", lambda: candidate_pairs(
+        signatures, cfg, auto_tune=auto_tune, tuned=tuned,
+        signatures_persisted=True, storage_level=storage_level))
+    pairs = materialize("pairs", lambda: verify_pairs(
+        cands, sets, cfg.jaccard_threshold))
+    clusters = materialize("clusters", lambda: assign_clusters(
+        sets, connected_components(pairs, cfg.cc_max_iterations)))
+    return DedupResult(conv, sets, signatures, cands, pairs, clusters)
+
+
+def _in_memory(storage_level) -> Materialize:
+    """Persist the two tables read more than once — sets (signatures,
+    both verify sides, cluster assignment) and pairs (every CC round,
+    and the caller) — and leave the other stages lazy."""
+    def materialize(name, build):
+        df = build()
+        if name in ("sets", "pairs"):
+            df = persist(df, storage_level)
+        return df
+    return materialize
 
 
 def dedup_pipeline(transcripts: DataFrame, cfg: DedupConfig,
-                   cache: bool = True,
-                   storage_level=None,
-                   sets_store=None,
-                   sets_buckets: int | None = None) -> DedupResult:
-    """Run the full pipeline lazily; returns every intermediate stage.
+                   storage_level=None) -> DedupResult:
+    """Assemble transcripts and run the stage graph in memory.
 
-    ``cache=True`` persists the tables used more than once.
-    ``storage_level`` overrides EVERY persist tier in the pipeline,
-    including the candidate fan-out table inside ``candidate_pairs``
-    (default: Spark's MEMORY_AND_DISK). Pass
-    ``pyspark.StorageLevel.DISK_ONLY`` when the deserialized caches
-    exceed executor memory at the smallest cluster size under
-    comparison: a cache that is memory-resident at one cluster size
-    and disk-spilled at another measures storage-tier asymmetry, not
-    compute scaling (BENCH/scaling.py) — pinning everything to one
-    tier keeps per-byte decode cost identical per task.
-
-    On the Arrow path (``cfg.shingle_impl == "arrow"``, the default)
-    shingling and MinHash run as ONE fused Arrow pass and ONE persist:
-    the cached table carries (id, items, set_size, signature), so the
-    element arrays — the widest column — cross the JVM↔Python boundary
-    once instead of twice, and the signature column needs no second
-    cache inside candidate_pairs (functions/shingle_arrow.py:
-    fused_shingle_minhash for the bandwidth arithmetic).
-    ``shingle_sets`` in the result IS that cached table (callers
-    unpersist it); its items/signature values are bit-identical to the
-    two-step path by shared-kernel construction.
-
-    ``cache=False`` on the Arrow path falls back to the TWO-STEP
-    formulation (separate shingle + MinHash UDF passes, bit-identical
-    outputs by shared kernels): an unpersisted fused table would feed
-    verify's two join sides and assign_clusters, re-running shingle AND
-    MinHash once per consumer, where the two-step uncached plan re-runs
-    only the shingle UDF for the verify sides (the fused pass exists to
-    save a JVM↔Python round trip, which only pays off when its output
-    is materialized exactly once).
-
-    ``sets_store`` (a ``plans.checkpoint.CheckpointStore``) replaces
-    the in-memory persist of the fused sets table with a CHECKPOINT
-    bucketed+sorted by id (``write_bucketed``; on Iceberg:
-    ``bucket(N, id)`` partition transform + sort order) of
-    ``sets_buckets`` buckets (default: the session's shuffle-partition
-    count, so the slim pair side co-partitions with the buckets
-    without a second exchange). Every downstream consumer then reads
-    the bucketed table in place of the cache: verify's two sort-merge
-    joins on id_a/id_b read the FAT side (the shingle arrays — the
-    widest rows in the pipeline) WITHOUT an exchange, as do the
-    mega-bucket signature join and the final cluster assignment —
-    only the slim pair side shuffles. The checkpoint write replaces
-    the cache materialization byte-for-byte (same columns, same
-    moment), so the trade is: +1 bucketed parquet write of the fused
-    table, −2 full exchanges of it. Construction becomes EAGER (the
-    checkpoint is written when this function runs). This is the
-    production verify layout flagged in operators/verify.py:49-51 and
-    SURVEY §P8 (reference analog: the degree-sort data layout pass,
-    /root/reference/src/utils.cuh:406-492).
+    The sets and pairs persists register with
+    ``persist.release_persisted``. ``storage_level`` sets the tier of
+    EVERY persist in the graph (default: Spark's MEMORY_AND_DISK).
+    Pass ``pyspark.StorageLevel.DISK_ONLY`` when comparing cluster sizes
+    whose caches would be memory-resident at one size and spilled at
+    the other: that measures the storage tier, not compute scaling
+    (BENCH/scaling.py).
     """
-    conversations = assemble_conversations(transcripts, cfg.text_separator)
-    if sets_store is not None and cfg.shingle_impl != "arrow":
-        # the bucketed-checkpoint layout is built from the fused Arrow
-        # table; silently falling through to the unbucketed persist
-        # would hand the caller an A/B that never ran the B variant
-        raise ValueError(
-            "sets_store requires cfg.shingle_impl='arrow' "
-            f"(got {cfg.shingle_impl!r})")
-    if cfg.shingle_impl == "arrow" and sets_store is not None:
-        from jaccard_ml_spark.functions.shingle_arrow import (
-            fused_shingle_minhash,
-        )
-        fused = fused_shingle_minhash(
-            conversations.select(F.col("conv_id").alias("id"), "text"),
-            "text", cfg.k_shingle, cfg.num_perm, cfg.minhash_seed)
-        n_buckets = sets_buckets or int(
-            sets_store.spark.conf.get("spark.sql.shuffle.partitions"))
-        sets_df = sets_store.write_bucketed(
-            "fused_sets", fused, ["id"], n_buckets=n_buckets,
-            sort_cols=["id"])
-        signatures = (sets_df.select("id", "set_size", "signature")
-                      .where(F.col("signature").isNotNull()))
-        # the checkpoint IS the materialization: scans of it never
-        # re-run the UDF, so candidate_pairs must not re-persist
-        sigs_cached = True
-    elif cfg.shingle_impl == "arrow" and cache:
-        from jaccard_ml_spark.functions.shingle_arrow import (
-            fused_shingle_minhash,
-        )
-        fused = fused_shingle_minhash(
-            conversations.select(F.col("conv_id").alias("id"), "text"),
-            "text", cfg.k_shingle, cfg.num_perm, cfg.minhash_seed)
-        fused = (fused.persist(storage_level) if storage_level
-                 else fused.persist())
-        sets_df = fused
-        signatures = (fused.select("id", "set_size", "signature")
-                      .where(F.col("signature").isNotNull()))
-        sigs_cached = cache
-    else:
-        sets_df = shingle_sets_from_conversations(conversations, cfg)
-        if cache:
-            sets_df = (sets_df.persist(storage_level) if storage_level
-                       else sets_df.persist())
-        signatures = minhash_signatures(sets_df, cfg)
-        sigs_cached = False
-
-    cands = candidate_pairs(signatures, cfg,
-                            signatures_persisted=sigs_cached,
-                            storage_level=storage_level)
-    pairs = verify_pairs(cands, sets_df, cfg.jaccard_threshold,
-                         semi_filter=cfg.verify_semi_filter,
-                         persist_level=storage_level)
-    if cache:
-        pairs = (pairs.persist(storage_level) if storage_level
-                 else pairs.persist())
-
-    comps = connected_components(pairs, cfg.cc_max_iterations)
-    clusters = assign_clusters(sets_df, comps)
-
-    return DedupResult(
-        conversations=conversations,
-        shingle_sets=sets_df,
-        signatures=signatures,
-        candidates=cands,
-        pairs=pairs,
-        clusters=clusters,
-    )
+    return dedup_stages(
+        lambda: assemble_conversations(transcripts, cfg.text_separator),
+        cfg, _in_memory(storage_level), storage_level)
 
 
 def dedup_documents(docs: DataFrame, cfg: DedupConfig,
-                    id_col: str = "doc_id", text_col: str = "text",
-                    cache: bool = True) -> DedupResult:
-    """Same pipeline for a flat document table (no assembly stage).
-
-    Like ``dedup_pipeline``, ``cache=False`` drops the fused Arrow pass
-    back to the two-step formulation — an unpersisted fused table would
-    re-run BOTH UDF kernels once per downstream consumer.
-    """
-    base = docs.select(F.col(id_col).alias("id"),
-                       F.col(text_col).alias("text"))
-    if cfg.shingle_impl == "arrow" and cache:
-        from jaccard_ml_spark.functions.shingle_arrow import (
-            fused_shingle_minhash,
-        )
-        sets_df = fused_shingle_minhash(base, "text", cfg.k_shingle,
-                                        cfg.num_perm, cfg.minhash_seed)
-        sets_df = sets_df.persist()   # branch is gated on cache above
-        signatures = (sets_df.select("id", "set_size", "signature")
-                      .where(F.col("signature").isNotNull()))
-        sigs_cached = True
-    else:
-        sets_df = _add_shingles(base, cfg).select("id", "items")
-        if cache:
-            sets_df = sets_df.persist()
-        signatures = minhash_signatures(sets_df, cfg)
-        sigs_cached = False
-    cands = candidate_pairs(signatures, cfg,
-                            signatures_persisted=sigs_cached)
-    pairs = verify_pairs(cands, sets_df, cfg.jaccard_threshold,
-                         semi_filter=cfg.verify_semi_filter)
-    if cache:
-        pairs = pairs.persist()
-    comps = connected_components(pairs, cfg.cc_max_iterations)
-    clusters = assign_clusters(sets_df, comps)
-    return DedupResult(None, sets_df, signatures, cands, pairs, clusters)
+                    id_col: str = "doc_id",
+                    text_col: str = "text") -> DedupResult:
+    """The stage graph for a flat document table (no assembly)."""
+    return dedup_stages(
+        lambda: docs.select(F.col(id_col).alias("conv_id"),
+                            F.col(text_col).alias("text")),
+        cfg, _in_memory(None))

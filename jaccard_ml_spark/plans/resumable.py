@@ -1,29 +1,19 @@
 """Resumable end-to-end dedup job over the checkpoint store.
 
-Same dataflow as plans/pipeline.py, but every stage goes through
-CheckpointStore.stage(): a killed job rerun with the same root resumes
-after the last completed stage and produces byte-identical output (the
-resume-equals-fresh invariant, SURVEY §5).
+The stage graph of plans/pipeline.py with CheckpointStore.stage() as its
+materialize step: every stage is written, and a killed job rerun with
+the same root resumes after the last completed stage and produces
+byte-identical output (the resume-equals-fresh invariant, SURVEY §5).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from jaccard_ml_spark.config import DedupConfig
 from jaccard_ml_spark.operators.assemble import assemble_conversations
-from jaccard_ml_spark.operators.candidates import (
-    candidate_pairs,
-    minhash_signatures,
-)
-from jaccard_ml_spark.operators.cluster import (
-    assign_clusters,
-    connected_components,
-)
-from jaccard_ml_spark.operators.verify import verify_pairs
 from jaccard_ml_spark.plans.checkpoint import CheckpointStore
-from jaccard_ml_spark.plans.pipeline import shingle_sets_from_conversations
+from jaccard_ml_spark.plans.pipeline import dedup_stages
 
 
 def run_resumable_dedup(
@@ -43,39 +33,15 @@ def run_resumable_dedup(
     hand-picked.
     """
     store = CheckpointStore(spark, checkpoint_root, run_id)
-
-    conversations = store.stage(
-        "s1_conversations",
-        lambda: assemble_conversations(transcripts, cfg.text_separator))
-    sets_df = store.stage(
-        "s2_shingles",
-        lambda: shingle_sets_from_conversations(conversations, cfg))
-    signatures = store.stage(
-        "s3_signatures", lambda: minhash_signatures(sets_df, cfg))
     tuned: dict = {}
-    cands = store.stage(
-        "s4_candidates",
-        lambda: candidate_pairs(signatures, cfg, auto_tune=auto_tune,
-                                tuned=tuned))
+    res = dedup_stages(
+        lambda: assemble_conversations(transcripts, cfg.text_separator),
+        cfg, store.stage, auto_tune=auto_tune, tuned=tuned)
     for k, v in tuned.items():
         store.metric(f"autotune.{k}", float(v))
-    pairs = store.stage(
-        "s5_pairs",
-        lambda: verify_pairs(cands, sets_df, cfg.jaccard_threshold))
-    clusters = store.stage(
-        "s6_clusters",
-        lambda: assign_clusters(
-            sets_df, connected_components(pairs, cfg.cc_max_iterations)))
 
-    store.metric("pairs.count", pairs.count())
+    store.metric("pairs.count", res.pairs.count())
     store.metric("clusters.count",
-                 clusters.select("cluster_id").distinct().count())
+                 res.clusters.select("cluster_id").distinct().count())
     store.flush_tables()
-    return {
-        "conversations": conversations,
-        "shingle_sets": sets_df,
-        "signatures": signatures,
-        "candidates": cands,
-        "pairs": pairs,
-        "clusters": clusters,
-    }
+    return dict(vars(res))

@@ -9,8 +9,29 @@ work distribution, SURVEY §4 P1/P3/P6).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+def driver_memory_from_meminfo(meminfo: str) -> str:
+    """Default ``spark.driver.memory`` for a host: half of MemTotal, capped
+    at 32g, from the text of ``/proc/meminfo`` ("32g" if MemTotal is
+    missing). A fixed 32g heap is larger than a 16 GB host: the kernel
+    OOM-kills the JVM once the heap grows past physical memory."""
+    m = re.search(r"^MemTotal:\s+(\d+)\s+kB", meminfo, re.MULTILINE)
+    if m is None:
+        return "32g"
+    return f"{min(int(m.group(1)) // 2048, 32 * 1024)}m"
+
+
+def _default_driver_memory() -> str:
+    try:
+        with open("/proc/meminfo") as f:
+            meminfo = f.read()
+    except OSError:
+        meminfo = ""
+    return driver_memory_from_meminfo(meminfo)
 
 
 def get_spark(
@@ -96,9 +117,10 @@ def get_spark(
             "65536",
         # local mode: driver heap hosts every task's sort/join/window
         # buffers plus the block-manager cache — size for the thread
-        # count (8g starves 32 concurrent tasks into GC thrash)
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM",
-                                              "32g"),
+        # count (8g starves 32 concurrent tasks into GC thrash), within
+        # the host's memory
+        "spark.driver.memory": (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                                or _default_driver_memory()),
         "spark.ui.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # keep per-batch Arrow IPC buffers well under the 32 MiB glibc

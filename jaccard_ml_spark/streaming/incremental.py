@@ -48,22 +48,11 @@ from jaccard_ml_spark.operators.cluster import (
     connected_components,
 )
 from jaccard_ml_spark.operators.verify import verify_pairs
-from jaccard_ml_spark.plans.pipeline import shingle_sets_from_conversations
-
-# delta tables persisted per batch; a long-lived session folding many
-# batches must release them once the batch's outputs are checkpointed,
+# release_persisted is part of this module's API: a long-lived session
+# folding many batches calls it once a batch's outputs are checkpointed,
 # or executor storage grows by one delta per batch (ADVICE r2)
-_PERSISTED: list = []
-
-
-def release_persisted(blocking: bool = False) -> int:
-    """Unpersist the delta tables cached by prior incremental_dedup
-    calls. Call after the returned tables are materialized/
-    checkpointed. Returns the number of tables released."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist(blocking)
-    return n
+from jaccard_ml_spark.persist import persist, release_persisted  # noqa: F401
+from jaccard_ml_spark.plans.pipeline import shingle_sets_from_conversations
 
 
 def incremental_dedup(
@@ -121,10 +110,9 @@ def incremental_dedup(
     # anti-joins, bucket join, verify, stale-pair invalidation) and
     # Catalyst performs no CSE across branches — unpersisted, the
     # shingle/MinHash UDFs would re-run over the batch once per branch
-    new_sets = shingle_sets_from_conversations(conv, cfg).persist()
+    new_sets = persist(shingle_sets_from_conversations(conv, cfg))
     new_ids = new_sets.select("id")
-    new_sigs = minhash_signatures(new_sets, cfg).persist()
-    _PERSISTED.extend([new_sets, new_sigs])
+    new_sigs = persist(minhash_signatures(new_sets, cfg))
 
     if prior_sets is None:
         all_sets = new_sets
@@ -202,8 +190,7 @@ def incremental_dedup(
         # sets are semi-join-filtered map-side before the verify joins:
         # the corpus is scanned (Iceberg prunes that too), never
         # shuffled; only the batch's duplicate neighborhood shuffles.
-        cands = cands.distinct().persist()
-        _PERSISTED.append(cands)
+        cands = persist(cands.distinct())
         cand_ids = (cands.select(F.col("id_a").alias("id"))
                     .unionByName(cands.select(F.col("id_b").alias("id")))
                     .distinct())
@@ -213,9 +200,8 @@ def incremental_dedup(
         # corpus-proportional term the r4 curve left (the filter made
         # the corpus scan-only, but it was still scanned once per
         # consumer). Delta-neighborhood-sized, like cands.
-        verify_sets = all_sets.join(F.broadcast(cand_ids), "id",
-                                    "left_semi").persist()
-        _PERSISTED.append(verify_sets)
+        verify_sets = persist(all_sets.join(F.broadcast(cand_ids), "id",
+                                            "left_semi"))
 
     new_pairs = verify_pairs(cands, verify_sets, cfg.jaccard_threshold)
     if prior_sets is not None:
@@ -223,8 +209,7 @@ def incremental_dedup(
         # touched-id set, the batch-local CC input, and each
         # materialization of comps/clusters) — unpersisted, every
         # branch re-runs the verify joins. Delta-sized.
-        new_pairs = new_pairs.persist()
-        _PERSISTED.append(new_pairs)
+        new_pairs = persist(new_pairs)
     if prior_pairs is None:
         pairs = new_pairs
         surviving_prior = None

@@ -24,7 +24,6 @@ from __future__ import annotations
 import json
 import os
 
-import pytest
 from pyspark.sql import types as T
 
 from jaccard_ml_spark.operators.similarity import (
@@ -32,8 +31,8 @@ from jaccard_ml_spark.operators.similarity import (
     _score_pairs,
     cosine_dup_pairs,
     embedding_near_dup_pairs,
-    release_persisted,
 )
+from jaccard_ml_spark.persist import release_persisted
 
 VEC = T.StructType([
     T.StructField("vec_id", T.StringType()),
@@ -101,19 +100,6 @@ def test_score_pairs_mixed_dims_in_one_batch(spark):
            for r in _score_pairs(cand, vecs, "vec_id",
                                  "embedding").collect()}
     assert got == {("a4", "b4"): 1.0, ("a2", "b2"): 1.0}
-
-
-def test_sets_store_requires_arrow_impl(spark):
-    from jaccard_ml_spark.config import DedupConfig
-    from jaccard_ml_spark.plans.pipeline import dedup_pipeline
-
-    tx = spark.createDataFrame(
-        [("c1", 0, "user", "hello world", None, None)],
-        "conv_id string, turn_idx int, role string, text string,"
-        " tool string, ts timestamp")
-    cfg = DedupConfig(shingle_impl="hof")
-    with pytest.raises(ValueError, match="shingle_impl"):
-        dedup_pipeline(tx, cfg, sets_store=object())
 
 
 def test_ensure_generated_kwargs_json_roundtrip(tmp_path):

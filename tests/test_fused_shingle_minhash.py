@@ -130,6 +130,9 @@ def test_fused_pipeline_caches_once(spark):
     _walk(res.pairs._jdf.queryExecution().executedPlan())
     n_python = sum(1 for v in python_caches.values() if v)
     assert n_python == 1, python_caches
-    res.shingle_sets.unpersist()
-    res.pairs.unpersist()
-    spark.catalog.clearCache()
+
+    # every table the graph persisted is registered: one release
+    # leaves the cache manager empty
+    from jaccard_ml_spark.persist import release_persisted
+    release_persisted()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -25,30 +25,41 @@ def test_resume_equals_fresh(spark, tmp_path):
     fresh = run_resumable_dedup(spark, tx, CFG, str(tmp_path / "cp_fresh"))
     fresh_clusters = _clusters(fresh)
 
-    # simulate a killed job: run stages 1-3 only, then "restart"
+    # the checkpointed and the in-memory executor run one stage graph
+    from jaccard_ml_spark.persist import release_persisted
+    from jaccard_ml_spark.plans.pipeline import dedup_pipeline
+
+    def _pairs(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    mem = dedup_pipeline(tx, CFG)
+    assert _pairs(fresh["pairs"]) == _pairs(mem.pairs)
+    assert fresh_clusters == sorted(
+        (r.id, r.cluster_id) for r in mem.clusters.collect())
+    release_persisted()
+
+    # simulate a killed job: run stages 1-2 only, then "restart"
     partial_root = str(tmp_path / "cp_partial")
-    from jaccard_ml_spark.operators.assemble import assemble_conversations
-    from jaccard_ml_spark.operators.candidates import minhash_signatures
-    from jaccard_ml_spark.plans.checkpoint import CheckpointStore
-    from jaccard_ml_spark.plans.pipeline import (
-        shingle_sets_from_conversations,
+    from jaccard_ml_spark.functions.shingle_arrow import (
+        fused_shingle_minhash,
     )
+    from jaccard_ml_spark.operators.assemble import assemble_conversations
+    from jaccard_ml_spark.plans.checkpoint import CheckpointStore
 
     store = CheckpointStore(spark, partial_root)
-    conv = store.stage("s1_conversations",
+    conv = store.stage("conversations",
                        lambda: assemble_conversations(tx, CFG.text_separator))
-    sets_df = store.stage(
-        "s2_shingles", lambda: shingle_sets_from_conversations(conv, CFG))
-    store.stage("s3_signatures", lambda: minhash_signatures(sets_df, CFG))
+    store.stage("sets", lambda: fused_shingle_minhash(
+        conv.select(conv.conv_id.alias("id"), "text"), "text",
+        CFG.k_shingle, CFG.num_perm, CFG.minhash_seed))
 
     # restart: completed stages must be read, not recomputed
     resumed = run_resumable_dedup(spark, tx, CFG, partial_root)
     assert _clusters(resumed) == fresh_clusters
 
-    # markers present for all 6 stages after the resumed run
+    # markers present for all 5 stages after the resumed run
     s2 = CheckpointStore(spark, partial_root)
-    for st in ["s1_conversations", "s2_shingles", "s3_signatures",
-               "s4_candidates", "s5_pairs", "s6_clusters"]:
+    for st in ["conversations", "sets", "candidates", "pairs", "clusters"]:
         assert s2.has(st)
 
 
