@@ -39,8 +39,14 @@ def shingles_from_tokens(toks: Column, k: int) -> Column:
     re-evaluated once PER ELEMENT (Catalyst performs no CSE across
     lambda iterations), which turns tokenization into
     O(n_tokens · |text|) per row — a measured 26× slowdown. Callers
-    materialize the tokens at a projection boundary first. Texts shorter than ``k`` tokens produce one shingle = the
-    whole token list, so no document vanishes from the index.
+    materialize the tokens at a projection boundary first. That boundary
+    only holds while no filter lands below it: filter pushdown, and the
+    ``size(x) > 0`` filter Spark infers for an ``explode`` of an
+    attribute, substitute the attribute's expression back into every
+    lambda the filter's condition carries. A value bound as an outer
+    lambda variable is immune (operators/suffix.anchor_sets). Texts
+    shorter than ``k`` tokens produce one shingle = the whole token
+    list, so no document vanishes from the index.
     """
     n = F.greatest(F.size(toks) - F.lit(k - 1), F.lit(1))
     grams = F.transform(
@@ -74,23 +80,3 @@ def shingles(col: Column, k: int) -> Column:
 def shingle_hashes(col: Column, k: int) -> Column:
     """Column-level convenience (SMALL/TEST data only)."""
     return shingle_hashes_from_tokens(tokens(col), k)
-
-
-def char_shingle_hashes_from_norm(norm: Column, k: int) -> Column:
-    """Character-k-gram hashes from a MATERIALIZED normalized-text column
-    (same per-element re-evaluation hazard as shingles_from_tokens)."""
-    n = F.greatest(F.length(norm) - F.lit(k - 1), F.lit(1))
-    grams = F.transform(
-        F.sequence(F.lit(1), n), lambda i: F.substring(norm, i, k)
-    )
-    return F.array_sort(
-        F.array_distinct(
-            F.transform(F.filter(grams, lambda g: g != F.lit("")),
-                        lambda g: F.xxhash64(g))
-        )
-    )
-
-
-def char_shingle_hashes(col: Column, k: int) -> Column:
-    """Column-level convenience (SMALL/TEST data only)."""
-    return char_shingle_hashes_from_norm(normalize_text(col), k)

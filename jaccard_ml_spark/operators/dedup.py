@@ -18,7 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from jaccard_ml_spark.operators.setsim import posting_lists, set_sizes
+from jaccard_ml_spark.operators.setsim import (
+    pair_intersections,
+    sized_postings,
+)
 
 
 def exact_dup_groups(docs: DataFrame, id_col: str = "doc_id",
@@ -54,20 +57,7 @@ def containment_pairs(
     with containment = |∩| / size_small. Both orientations are checked;
     the row is emitted with the *contained* set first.
     """
-    post = posting_lists(sets_df, id_col, items_col)
-    sizes = set_sizes(sets_df, id_col, items_col)
-
-    a = post.select(F.col("id").alias("id_a"), "item")
-    b = post.select(F.col("id").alias("id_b"), F.col("item").alias("item_b"))
-    inter = (
-        a.join(b, (a.item == b.item_b) & (F.col("id_a") < F.col("id_b")))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("intersection"))
-        .join(sizes.withColumnsRenamed(
-            {"id": "id_a", "set_size": "size_a"}), "id_a")
-        .join(sizes.withColumnsRenamed(
-            {"id": "id_b", "set_size": "size_b"}), "id_b")
-    )
+    inter = pair_intersections(sized_postings(sets_df, id_col, items_col))
     small_first = inter.select(
         F.when(F.col("size_a") <= F.col("size_b"), F.col("id_a"))
         .otherwise(F.col("id_b")).alias("id_small"),

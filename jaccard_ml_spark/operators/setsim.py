@@ -5,11 +5,12 @@ This is the DataFrame form of the reference's set-intersection kernels
 neighbor lists and counts matches. Here the *posting-list self-join*
 plays that role:
 
-    explode(items) → (item, id) postings
+    explode(items) → (id, |set|, item) postings  (sizes ride along
+        into the grouping keys: no pass joins them back)
     postings ⋈ postings ON item, id_a < id_b     (the compute-once
         tie-break of /root/reference/src/edge_metrics.cu:42-44, reborn
         as canonical pair ordering)
-    groupBy(id_a, id_b) → count = |∩|            (partial+final agg —
+    groupBy(id_a, id_b, size_a, size_b) → |∩|   (partial+final agg —
         the warpReduce of /root/reference/src/gpu_utils.cu:59-65 is
         Spark's map-side combine)
 
@@ -30,11 +31,27 @@ from jaccard_ml_spark.functions import metrics as M
 
 def posting_lists(sets_df: DataFrame, id_col: str = "id",
                   items_col: str = "items") -> DataFrame:
-    """(id, items array) → exploded (item, id) postings, deduplicated."""
+    """(id, items array) → exploded (id, item) postings, deduplicated."""
+    return sized_postings(sets_df, id_col, items_col).select("id", "item")
+
+
+def sized_postings(sets_df: DataFrame, id_col: str = "id",
+                   items_col: str = "items") -> DataFrame:
+    """(id, set_size, item): one row per distinct item of each set,
+    carrying the set's cardinality — one scan of the input feeds both.
+
+    ``explode`` takes an expression, not a column attribute: for an
+    attribute input Spark infers ``size(x) > 0 AND isnotnull(x)`` and
+    pushes it below the caller's projections, where it re-runs whatever
+    computes ``items`` (the whole gram loop of suffix.anchor_sets).
+    """
     return (
         sets_df
         .select(F.col(id_col).alias("id"),
-                F.explode(F.array_distinct(items_col)).alias("item"))
+                F.size(F.array_distinct(items_col)).alias("set_size"),
+                F.col(items_col).alias("_items"))
+        .select("id", "set_size",
+                F.explode(F.array_distinct("_items")).alias("item"))
     )
 
 
@@ -61,6 +78,25 @@ def size_window_filter(sets_df: DataFrame, lo: int, hi: int,
     return sets_df.where((sz >= F.lit(lo)) & (sz <= F.lit(hi)))
 
 
+def pair_intersections(post: DataFrame, *aggs) -> DataFrame:
+    """Posting self-join → (id_a, id_b, size_a, size_b, intersection,
+    *aggs), one row per unordered pair sharing ≥1 item, id_a < id_b.
+
+    ``post`` is :func:`sized_postings` output, optionally with per-item
+    columns that ``aggs`` read from the a side. Set sizes ride through
+    the join and the grouping keys, so no caller joins them back.
+    """
+    a = post.withColumnsRenamed({"id": "id_a", "set_size": "size_a"})
+    b = post.select(F.col("id").alias("id_b"),
+                    F.col("set_size").alias("size_b"),
+                    F.col("item").alias("item_b"))
+    return (
+        a.join(b, (a.item == b.item_b) & (F.col("id_a") < F.col("id_b")))
+        .groupBy("id_a", "id_b", "size_a", "size_b")
+        .agg(F.count("*").alias("intersection"), *aggs)
+    )
+
+
 def pairwise_metrics(
     sets_df: DataFrame,
     id_col: str = "id",
@@ -79,36 +115,17 @@ def pairwise_metrics(
     df(item) = number of sets containing item, which on symmetric
     adjacency sets equals the reference's deg(w) exactly.
     """
-    post = posting_lists(sets_df, id_col, items_col)
+    post = sized_postings(sets_df, id_col, items_col)
 
-    need_weighted = any(m in M.WEIGHTED_METRICS for m in metrics)
-    if need_weighted:
+    aggs = []
+    if any(m in M.WEIGHTED_METRICS for m in metrics):
         freq = post.groupBy("item").agg(F.count("*").alias("df"))
         post = post.join(freq, "item")
-
-    a = post.select(F.col("id").alias("id_a"), "item",
-                    *(["df"] if need_weighted else []))
-    b = post.select(F.col("id").alias("id_b"), F.col("item").alias("item_b"))
-    joined = a.join(b, (a.item == b.item_b) & (F.col("id_a") < F.col("id_b")))
-
-    aggs = [F.count("*").alias("intersection")]
-    if need_weighted:
-        aggs += [
-            F.sum(1.0 / F.log("df")).alias("_aa"),
-            F.sum(1.0 / F.col("df")).alias("_ra"),
-        ]
-    inter = joined.groupBy("id_a", "id_b").agg(*aggs)
+        aggs = [F.sum(1.0 / F.log("df")).alias("_aa"),
+                F.sum(1.0 / F.col("df")).alias("_ra")]
+    out = pair_intersections(post, *aggs)
     if min_intersection > 1:
-        inter = inter.where(F.col("intersection") >= min_intersection)
-
-    sizes = set_sizes(sets_df, id_col, items_col)
-    out = (
-        inter
-        .join(sizes.withColumnsRenamed(
-            {"id": "id_a", "set_size": "size_a"}), "id_a")
-        .join(sizes.withColumnsRenamed(
-            {"id": "id_b", "set_size": "size_b"}), "id_b")
-    )
+        out = out.where(F.col("intersection") >= min_intersection)
 
     i, sa, sb = F.col("intersection"), F.col("size_a"), F.col("size_b")
     for m in metrics:
@@ -118,9 +135,7 @@ def pairwise_metrics(
             out = out.withColumn(m, F.col("_ra"))
         else:
             out = out.withColumn(m, M.SIZE_ONLY_METRICS[m](i, sa, sb))
-    drop = [c for c in ("_aa", "_ra") if c in out.columns and
-            "adamic_adar" not in metrics and "resource_alloc" not in metrics]
-    return out.drop(*drop).select(
+    return out.select(
         "id_a", "id_b", "intersection", "size_a", "size_b", *metrics
     )
 
@@ -138,22 +153,8 @@ def exact_jaccard_pairs(
     posting join inherits Catalyst's sort-merge/broadcast choice (the
     reference's build-side selection J4 is automatic here).
     """
-    post = posting_lists(sets_df, id_col, items_col)
-    sizes = set_sizes(sets_df, id_col, items_col)
-
-    a = post.select(F.col("id").alias("id_a"), "item")
-    b = post.select(F.col("id").alias("id_b"), F.col("item").alias("item_b"))
-    inter = (
-        a.join(b, (a.item == b.item_b) & (F.col("id_a") < F.col("id_b")))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("intersection"))
-    )
-    out = (
-        inter
-        .join(sizes.withColumnsRenamed(
-            {"id": "id_a", "set_size": "size_a"}), "id_a")
-        .join(sizes.withColumnsRenamed(
-            {"id": "id_b", "set_size": "size_b"}), "id_b")
+    return (
+        pair_intersections(sized_postings(sets_df, id_col, items_col))
         .withColumn(
             "jaccard",
             F.col("intersection")
@@ -162,4 +163,3 @@ def exact_jaccard_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return out

@@ -16,8 +16,10 @@ Scale design (no quadratic substring scan):
    k-grams make anchor-containment slightly optimistic, never
    pessimistic for |A| ≥ k).
 
-Documents shorter than k chars have no k-grams — they fall to the
-exact-dedup/md5 path, which catches tiny exact copies anyway.
+Documents shorter than k chars get one anchor: the hash of their whole
+normalized text. They pair only with identical normalized texts (every
+gram of a longer text has exactly k chars), and all texts that
+normalize to empty pair with each other. NULL texts get no anchors.
 """
 
 from __future__ import annotations
@@ -31,10 +33,20 @@ from jaccard_ml_spark.operators.dedup import containment_pairs
 
 def anchor_sets(docs: DataFrame, k_char: int = 24, mod: int = 8,
                 id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, items): content-keyed sampled char-k-gram hashes.
+    """(id, items): content-keyed sampled char-k-gram hashes, one row per
+    doc with a non-NULL text.
 
-    The normalized text is materialized as a column attribute before the
-    gram loop (HOF-lambda re-evaluation hazard — functions/text.py).
+    A text shorter than ``k_char`` has one gram, its whole normalized
+    text (``sequence(1, 0)`` is ``[1, 0]`` and both positions read the
+    full string), so identical short texts share their one anchor.
+
+    The normalized text is bound once per row as the outer lambda
+    variable ``s`` of the gram loop. Projecting it as a column first is
+    not enough: a filter pushed below this projection — by a caller, or
+    inferred by Spark for an ``explode`` of ``items`` — re-inlines the
+    column's expression into the per-position lambda, where it runs once
+    per position (functions/text.py). As a lambda variable it runs once
+    per row whatever is pushed down.
 
     Short-doc floor: a doc with fewer than ``4·mod`` k-grams keeps ALL
     its gram hashes (no sampling) — below that count the sampled set is
@@ -52,26 +64,22 @@ def anchor_sets(docs: DataFrame, k_char: int = 24, mod: int = 8,
     __spark_entry__ does). The exact-dedup md5 path still catches short
     exact copies.
     """
-    with_norm = docs.select(
-        F.col(id_col).alias("id"),
-        normalize_text(F.col(text_col)).alias("_norm"))
-    norm = F.col("_norm")
-    n = F.greatest(F.length(norm) - F.lit(k_char - 1), F.lit(0))
-    grams = F.array_distinct(F.transform(
-        F.sequence(F.lit(1), n),
-        lambda i: F.xxhash64(F.substring(norm, i, k_char)),
-    ))
-    with_grams = with_norm.select("id", grams.alias("_grams"))
+    grams = F.array_distinct(F.flatten(F.transform(
+        F.array(normalize_text(F.col(text_col))),
+        lambda s: F.transform(
+            F.sequence(F.lit(1),
+                       F.greatest(F.length(s) - F.lit(k_char - 1), F.lit(0))),
+            lambda i: F.xxhash64(F.substring(s, i, k_char))),
+    )))
+    with_grams = docs.where(F.col(text_col).isNotNull()).select(
+        F.col(id_col).alias("id"), grams.alias("_grams"))
     sampled = F.filter(F.col("_grams"),
                        lambda h: F.pmod(h, F.lit(mod)) == 0)
     items = F.when(
         (F.size("_grams") >= F.lit(4 * mod)) & (F.size(sampled) > 0),
         sampled,
     ).otherwise(F.col("_grams"))
-    return with_grams.select(
-        "id",
-        F.array_sort(items).alias("items"),
-    ).where(F.size("items") > 0)
+    return with_grams.select("id", F.array_sort(items).alias("items"))
 
 
 def substring_pairs(

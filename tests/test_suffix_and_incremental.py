@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from jaccard_ml_spark.config import DedupConfig
@@ -60,7 +62,6 @@ def test_substring_pairs_finds_planted_prefix(spark, tmp_path):
     # and every reported substring really is one
     texts = {r.doc_id: r.text for r in conv.collect()}
     for a, b in got:
-        import re
         na = re.sub(r"[^a-z0-9]+", " ", texts[a].lower()).strip()
         nb = re.sub(r"[^a-z0-9]+", " ", texts[b].lower()).strip()
         assert na in nb
@@ -80,14 +81,54 @@ def test_anchor_sets_never_drops_docs_with_grams(spark):
     assert kept.count() == 40
     assert kept.where(F.size("items") == 0).count() == 0
     # exact copies among short docs always pair (identical anchor sets
-    # whichever branch they took)
+    # whichever branch they took); texts shorter than k_char keep one
+    # whole-text anchor, so identical ones pair too; NULL texts get no
+    # anchors (both used to share xxhash64(NULL) and come out as a
+    # swapped pair with a NULL is_substring)
     pair = spark.createDataFrame(
         [(100, "tiny contained payload text abc"),
-         (101, "tiny contained payload text abc")],
+         (101, "tiny contained payload text abc"),
+         (102, "short"), (103, "Short."),
+         (104, None), (105, None)],
         "doc_id long, text string")
-    found = substring_pairs(pair).where(F.col("is_substring") == 1)
-    got = {(r.id_small, r.id_big) for r in found.collect()}
-    assert (100, 101) in got, got
+    got = {(r.id_small, r.id_big, r.is_substring)
+           for r in substring_pairs(pair).collect()}
+    assert got == {(100, 101, 1), (102, 103, 1)}, got
+
+
+def _regex_in_lambda(df) -> int:
+    """Count regexp_replace calls inside a lambdafunction(...) of the
+    optimized plan: each one is text normalization re-run per element
+    of a higher-order-function loop."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    spans, start = [], plan.find("lambdafunction(")
+    while start >= 0:
+        depth = 0
+        for end in range(start + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        spans.append((start, end))
+        start = plan.find("lambdafunction(", start + 1)
+    return sum(any(a < m.start() < b for a, b in spans)
+               for m in re.finditer("regexp_replace", plan))
+
+
+def test_anchor_normalization_stays_out_of_gram_loop(spark):
+    """Normalization runs once per doc, never once per k-gram position:
+    neither the anchor join's inferred filters nor a caller's filter on
+    ``items`` may pull it into the gram lambda, and each side of the
+    anchor self-join runs the gram loop once."""
+    from jaccard_ml_spark.operators.suffix import anchor_sets
+
+    docs = spark.createDataFrame(
+        [(1, "Some text, long enough for grams."), (2, None)],
+        "doc_id long, text string")
+    pairs = substring_pairs(docs)
+    assert _regex_in_lambda(pairs) == 0
+    assert _regex_in_lambda(anchor_sets(docs).where(F.size("items") > 0)) == 0
+    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("xxhash64(substring(") == 2, plan
 
 
 def test_incremental_equals_batch(spark, tmp_path):
