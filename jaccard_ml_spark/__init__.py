@@ -9,11 +9,10 @@ idea), re-expressed as an idiomatic Spark DataFrame pipeline:
 
     transcripts (conv_id, turn_idx, role, text, tool, ts)
       → assemble (stable turn ordering)
-      → normalize + k-shingle + hash          (JVM higher-order functions)
-      → MinHash signatures                    (vectorized Arrow pandas UDF)
-      → LSH band buckets → candidate pairs    (skew-aware salted self-join)
-      → exact Jaccard verification            (array_intersect, JVM codegen)
-      → connected components                  (small-star/large-star joins)
+      → normalize + k-shingle + hash + MinHash  (one fused Arrow mapInPandas)
+      → LSH band buckets → candidate pairs      (skew-aware salted self-join)
+      → exact Jaccard verification              (array_intersect, JVM codegen)
+      → connected components                    (small-star/large-star joins)
       → clusters + lineage + metrics tables
 
 Everything here derives from public knowledge only: the Apache Spark API,
@@ -23,7 +22,16 @@ MinHash, Leskovec/Rajaraman/Ullman MMDS ch.3 LSH, Kiveris et al. '14
 """
 
 from jaccard_ml_spark.config import DedupConfig
-from jaccard_ml_spark.session import get_spark
 
 __all__ = ["DedupConfig", "get_spark"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # get_spark is resolved on first use (PEP 562) so that importing the
+    # package does not import pyspark: the Python worker daemon
+    # (``_daemon``) imports this package before it may import pyspark.
+    if name == "get_spark":
+        from jaccard_ml_spark.session import get_spark
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

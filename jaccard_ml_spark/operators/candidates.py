@@ -48,11 +48,11 @@ def minhash_signatures(sets_df: DataFrame, cfg: DedupConfig,
 def lsh_buckets(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(id, signature) → (band_id, bucket_hash, id), one row per band.
 
-    Deliberately slim — 24 bytes/row. Carrying the 128-long signature
-    array through the bucket exchanges multiplies shuffle volume ~40×
-    (measured 50s+69s → ~5s at 3.8M bucket rows); stages that need the
-    signature (mega-bucket band splitting) join it back by id for the
-    few rows involved.
+    Deliberately slim — 24 bytes/row. Carrying the signature array
+    (``num_perm`` longs, 96 by default) through the bucket exchanges
+    multiplies shuffle volume by tens (measured 50s+69s → ~5s at 3.8M
+    bucket rows); stages that need the signature (mega-bucket band
+    splitting) join it back by id for the few rows involved.
     """
     return (
         signatures

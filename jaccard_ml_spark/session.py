@@ -13,25 +13,54 @@ import re
 
 from pyspark.sql import SparkSession
 
+import jaccard_ml_spark
+from jaccard_ml_spark import _daemon
+
+# free tmpfs (and RAM left beside the driver heap) needed before shuffle
+# files go to /dev/shm
+SHM_HEADROOM = 16 * 1024**3
+
+
+def _mem_total_kb(meminfo: str) -> int | None:
+    m = re.search(r"^MemTotal:\s+(\d+)\s+kB", meminfo, re.MULTILINE)
+    return None if m is None else int(m.group(1))
+
+
+def _heap_mb(mem_total_kb: int) -> int:
+    return min(mem_total_kb // 2048, 32 * 1024)
+
 
 def driver_memory_from_meminfo(meminfo: str) -> str:
     """Default ``spark.driver.memory`` for a host: half of MemTotal, capped
     at 32g, from the text of ``/proc/meminfo`` ("32g" if MemTotal is
     missing). A fixed 32g heap is larger than a 16 GB host: the kernel
     OOM-kills the JVM once the heap grows past physical memory."""
-    m = re.search(r"^MemTotal:\s+(\d+)\s+kB", meminfo, re.MULTILINE)
-    if m is None:
+    kb = _mem_total_kb(meminfo)
+    if kb is None:
         return "32g"
-    return f"{min(int(m.group(1)) // 2048, 32 * 1024)}m"
+    return f"{_heap_mb(kb)}m"
 
 
-def _default_driver_memory() -> str:
+def shuffle_on_shm(meminfo: str, shm_free: int) -> bool:
+    """Whether local shuffle files may go to the RAM-backed ``/dev/shm``:
+    only when it has ``SHM_HEADROOM`` free AND the RAM left after the
+    default driver heap (``driver_memory_from_meminfo``) covers the same
+    headroom. A tmpfs is usually sized to RAM, so its free space alone
+    says nothing about the memory the heap already claims. False when
+    MemTotal is missing."""
+    kb = _mem_total_kb(meminfo)
+    if kb is None:
+        return False
+    left = kb * 1024 - _heap_mb(kb) * 1024**2
+    return min(shm_free, left) >= SHM_HEADROOM
+
+
+def _meminfo() -> str:
     try:
         with open("/proc/meminfo") as f:
-            meminfo = f.read()
+            return f.read()
     except OSError:
-        meminfo = ""
-    return driver_memory_from_meminfo(meminfo)
+        return ""
 
 
 def get_spark(
@@ -120,7 +149,7 @@ def get_spark(
         # count (8g starves 32 concurrent tasks into GC thrash), within
         # the host's memory
         "spark.driver.memory": (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
-                                or _default_driver_memory()),
+                                or driver_memory_from_meminfo(_meminfo())),
         "spark.ui.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # keep per-batch Arrow IPC buffers well under the 32 MiB glibc
@@ -144,12 +173,13 @@ def get_spark(
         # local disks per executor — tmpfs is the sandbox equivalent.
         # On a real cluster the cluster manager provides local dirs
         # and this key is never set.
-        # Guard: tmpfs is RAM-backed — if /dev/shm is small relative to
-        # plausible shuffle volume (small machines, containers with a
-        # tiny shm mount), silently defaulting to it trades a slow
-        # shuffle for ENOSPC/OOM. Fall back to Spark's default disk
-        # dirs unless there is comfortable headroom (or the user chose
-        # a dir explicitly via SPARK_GRAFT_LOCAL_DIR).
+        # Guard: tmpfs is RAM-backed — if /dev/shm or the RAM beside the
+        # driver heap is small relative to plausible shuffle volume
+        # (small machines, containers with a tiny shm mount), silently
+        # defaulting to it trades a slow shuffle for ENOSPC/OOM. Fall
+        # back to Spark's default disk dirs unless there is comfortable
+        # headroom (``shuffle_on_shm``), or the user chose a dir
+        # explicitly via SPARK_GRAFT_LOCAL_DIR.
         local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
         if local_dir is None:
             import shutil
@@ -157,7 +187,7 @@ def get_spark(
                 free = shutil.disk_usage("/dev/shm").free
             except OSError:
                 free = 0
-            if free >= 16 * 1024**3:
+            if shuffle_on_shm(_meminfo(), free):
                 local_dir = "/dev/shm/spark-local"
         if local_dir:
             try:
@@ -165,6 +195,16 @@ def get_spark(
                 conf["spark.local.dir"] = local_dir
             except OSError:
                 pass
+        # Python workers import pyspark from its installed directory
+        # instead of $SPARK_HOME's pyspark.zip, which every task would
+        # otherwise re-read (see ``_daemon``). The package root goes on
+        # the workers' path so the daemon imports whatever the cwd; if
+        # it could not, every Python UDF in the session would fail.
+        # Other masters keep Spark's daemon: their executors get the
+        # package only as per-task py-files, after the daemon starts.
+        conf["spark.python.daemon.module"] = _daemon.__name__
+        conf["spark.executorEnv.PYTHONPATH"] = os.path.dirname(
+            os.path.dirname(os.path.abspath(jaccard_ml_spark.__file__)))
     for k, v in _MALLOC_ENV.items():
         conf[f"spark.executorEnv.{k}"] = v
     if extra_conf:
